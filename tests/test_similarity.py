@@ -208,6 +208,25 @@ def test_simhash_columnar_matches_per_token_spec(spark):
     assert got == expected
 
 
+def test_simhash_matches_duckdb(spark):
+    """The two-conv bit read must stay value-identical to the DuckDB
+    oracle at sf0.001 (the full gate runs at sf0.01 via
+    scripts/check_oracle)."""
+    import duckdb
+
+    from document_ai_spark.queries_ml import SQL_SIMHASH, q_simhash
+    from scripts.check_oracle import canon
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
+    )
+    sdf = q_simhash(spark, SF).toPandas()
+    odf = con.execute(SQL_SIMHASH).df()
+    assert len(sdf) == len(odf)
+    assert canon(sdf)[0] == canon(odf)[0]
+
+
 def test_ivf_quantizer_fit_is_sample_bounded(spark, monkeypatch):
     """The KMeans coarse quantizer must train on a bounded sample, never the
     full vector table (clusterSizes sums to the fit input rows)."""

@@ -1,8 +1,10 @@
 """2-D nearest-right word search: hand-checked geometry, reference
-sentinel behavior, and in-kernel == relational equivalence."""
+sentinel behavior, in-kernel == relational equivalence, oracle parity
+and the relational plan's shape."""
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
 
 from document_ai_spark.operators.spatial import (
@@ -10,13 +12,16 @@ from document_ai_spark.operators.spatial import (
     next_right_in_page,
     next_right_word_kernel,
 )
+from document_ai_spark.plans.audit import formatted_plan
 from document_ai_spark.queries_spatial import (
     KEYS_2D,
     KEYS_FUZZY,
+    SQL_NEXT_RIGHT_WORD_2D,
     _word_boxes,
     q_fuzzy_key_next_right,
     q_next_right_word_2d,
 )
+from scripts.check_oracle import canon
 
 SF = "/root/testdata/sf0.001"
 
@@ -108,3 +113,26 @@ def test_kernel_equals_relational(spark):
     # and the fuzzy run is non-degenerate: real words found
     found = [r for r in relf if r[2] not in ("<NOT_FOUND>", "<EMPTY>")]
     assert len(found) > 0
+
+
+def test_next_right_word_2d_matches_duckdb(spark):
+    """The broadcast key-box rewrite must stay value-identical to the
+    DuckDB oracle at sf0.001 (the full gate runs at sf0.01 via
+    scripts/check_oracle)."""
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
+    )
+    sdf = q_next_right_word_2d(spark, SF).toPandas()
+    odf = con.execute(SQL_NEXT_RIGHT_WORD_2D).df()
+    assert len(sdf) == len(odf)
+    assert canon(sdf)[0] == canon(odf)[0]
+
+
+def test_next_right_word_2d_plan_shape(spark):
+    """Plan pin: the key-box table is broadcast into every join, so the
+    plan has no SortMergeJoin, and no exchange repartitions the scan to
+    a fixed partition count."""
+    plan = formatted_plan(q_next_right_word_2d(spark, SF))
+    assert "SortMergeJoin" not in plan
+    assert "REPARTITION_BY_NUM" not in plan
