@@ -115,17 +115,18 @@ def neardup_keeper_flags(
     pass). Production funnels dedup fuzzily, not just exactly — this is
     the cluster-keeper composition as a funnel stage.
 
-    The pair generator is the SHARED builder (queries_base.
-    minhash_band_pairs): the funnel's DuckDB oracle composes
-    _sql_minhash_core, so one Spark-side construction must back both the
-    documents-table queries and this engine or the oracles silently
-    drift. Components converge in O(log diameter) rounds of hash joins
-    (operators/similarity.connected_components)."""
-    from ..queries_base import minhash_band_pairs
+    The clusters need only connectivity, so the input is the star-shaped
+    LSH edge set (queries_base.minhash_band_edges: k-1 edges per bucket
+    of k docs, not k(k-1)/2 pairs) — the same components as the
+    all-pairs set the funnel's DuckDB oracle builds, and one Spark-side
+    bucket construction (queries_base._minhash_band_buckets) behind
+    both, so the oracles cannot silently drift. Components come from
+    operators/similarity.connected_components."""
+    from ..queries_base import minhash_band_edges
     from .similarity import dedup_clusters
 
-    pairs = minhash_band_pairs(df, id_col=id_col, text_col=text_col)
-    clusters = dedup_clusters(pairs)
+    edges = minhash_band_edges(df, id_col=id_col, text_col=text_col)
+    clusters = dedup_clusters(edges)
     nd = clusters.select(
         F.col("doc_id").alias("_id"), F.col("is_keeper")
     )

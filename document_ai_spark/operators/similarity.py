@@ -196,7 +196,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     the minimum node id reachable (or (labels, n_rounds) when
     `with_rounds` — the round count is the scale diagnostic: min-label
     propagation alone is O(diameter) rounds, the pointer-jumping step
-    below cuts it to O(log diameter); tests/test_round4.py pins a 30-hop
+    below cuts it to O(log diameter); tests/test_similarity.py pins a 30-hop
     chain to <= 6 rounds). Each round joins labels across edges, keeps
     the per-node minimum, then jumps component <- label(component);
     stops when no label changes. All shuffle-friendly hash joins on
@@ -221,8 +221,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     # symmetric closure in ONE pass: explode each edge into both
     # directions. The union-of-two-projections form this replaces
     # evaluated the whole upstream `edges` plan twice — for the usual
-    # caller (dedup_clusters over LAZY minhash_band_pairs) that meant
-    # scan -> shingle -> signature -> bucket -> pair-explode ran twice
+    # caller (dedup_clusters over LAZY minhash_band_edges) that meant
+    # scan -> shingle -> signature -> bucket -> edge-explode ran twice
     # per funnel (verified: 2 parquet scans, zero ReusedExchange in the
     # executed plan of the union form; 1 scan after this change).
     sym = (

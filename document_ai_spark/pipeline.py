@@ -330,9 +330,12 @@ def run_pipeline(
                 "url",
             )
         kept = kept_filter(flags, rules).select("url")
-        extracted.join(kept, "url", "left_semi").write.mode(
-            "overwrite"
-        ).parquet(curated_dir)
+        # url order inside each file: when AQE turns the semi-join into a
+        # broadcast, rows keep the shuffle-fetch order, which differs run
+        # to run — a resumed run must write the same bytes as a clean one
+        extracted.join(kept, "url", "left_semi").sortWithinPartitions(
+            "url"
+        ).write.mode("overwrite").parquet(curated_dir)
         # docs_in is the extracted TABLE's row count (footers — the old
         # extracted.count() re-ran the collapse window just for the
         # summary); docs_kept reads the freshly-written footers

@@ -37,19 +37,16 @@ N_MINHASH = 8
 N_BANDS = 4  # 2 hashes per band
 
 
-def minhash_band_pairs(df, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       n_hashes: int = N_MINHASH,
-                       n_bands: int = N_BANDS,
-                       rows_per_band: int | None = None):
-    """Generic MinHash + LSH candidate-pair builder over any
-    (id, text) frame — ONE construction (8-hex-char md5-slice minima,
-    `rows_per_band` consecutive hashes concatenated per band) shared by
-    the documents-table queries (queries_ml) and the curation engine
-    (operators/curate), so the DuckDB oracle twin (_sql_minhash_core)
-    can never drift from one copy while the other is updated. Returns
-    (doc_a, doc_b) candidate pairs from the bucketed band pair-explode
-    (r5: no self-join; never all-pairs).
+def _minhash_band_buckets(df, id_col: str, text_col: str,
+                          n_hashes: int, n_bands: int,
+                          rows_per_band: int | None):
+    """MinHash + LSH bucket stage over any (id, text) frame: ONE
+    construction (8-hex-char md5-slice minima, `rows_per_band`
+    consecutive hashes concatenated per band) behind both public
+    builders below, so the DuckDB oracle twin (_sql_minhash_core) can
+    never drift from one copy while the other is updated. Returns one
+    row per (band_no, band_key) bucket holding >= 2 docs, with the
+    sorted id set in `ids`.
 
     Banding is a deployment knob (r3 verdict item 4): a pair with
     shingle-Jaccard s collides with probability 1 - (1 - s^r)^b for
@@ -124,23 +121,35 @@ def minhash_band_pairs(df, id_col: str = "doc_id",
             )
         ).alias("band_no", "band_key"),
     )
-    # within-bucket pairs WITHOUT a self-join: group each (band_no,
-    # band_key) bucket, collect its sorted id set, and explode the
-    # strictly-upper-triangle combinations. The aliased a/b self-join
-    # this replaces defeated Spark's exchange reuse — both join sides
-    # re-ran the whole scan->shingle->signature pipeline (measured: the
-    # join stage cost one extra full signature evaluation plus two
-    # exchanges; this form evaluates signatures ONCE and shuffles 8
-    # short band rows per doc). Sorted-array pairing makes
-    # doc_a < doc_b by construction — identical pair SET to the
-    # oracle's SQL self-join (_sql_minhash_core keeps the join form;
-    # DuckDB evaluates its CTE once). Skew note: a bucket of k docs
-    # emits its k(k-1)/2 pairs from one row — the same k^2 blowup the
-    # join form had on the same key, neither spreads a hot bucket.
-    buckets = (
+    # one row per bucket: group each (band_no, band_key) and collect
+    # its sorted id set. This replaces an aliased a/b self-join that
+    # defeated Spark's exchange reuse — both join sides re-ran the
+    # whole scan->shingle->signature pipeline (measured: the join stage
+    # cost one extra full signature evaluation plus two exchanges; this
+    # form evaluates signatures ONCE and shuffles 8 short band rows per
+    # doc).
+    return (
         bands.groupBy("band_no", "band_key")
         .agg(F.array_sort(F.collect_set("_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
+    )
+
+
+def minhash_band_pairs(df, id_col: str = "doc_id",
+                       text_col: str = "text",
+                       n_hashes: int = N_MINHASH,
+                       n_bands: int = N_BANDS,
+                       rows_per_band: int | None = None):
+    """Every (doc_a, doc_b) candidate pair, doc_a < doc_b, from docs
+    sharing any LSH band bucket: the strictly-upper-triangle explode of
+    each bucket's sorted id set — the IDENTICAL pair set to the oracle's
+    SQL self-join (_sql_minhash_core keeps the join form; DuckDB
+    evaluates its CTE once). A bucket of k docs emits k(k-1)/2 pairs
+    from one row, so this backs only the `minhash_lsh_pairs` registry
+    entry, whose oracle is the pair set itself; clustering consumers
+    take `minhash_band_edges`."""
+    buckets = _minhash_band_buckets(
+        df, id_col, text_col, n_hashes, n_bands, rows_per_band
     )
     return (
         buckets.select(
@@ -165,6 +174,30 @@ def minhash_band_pairs(df, id_col: str = "doc_id",
             ).alias("p")
         )
         .select("p.doc_a", "p.doc_b")
+        .distinct()
+    )
+
+
+def minhash_band_edges(df, id_col: str = "doc_id",
+                       text_col: str = "text"):
+    """Star-shaped (doc_a, doc_b) edges, doc_a < doc_b, for consumers
+    that need only connectivity (connected components, keeper flags):
+    each bucket's min id paired with every other member, k-1 edges for
+    a bucket of k docs instead of k(k-1)/2 pairs. Each bucket is a
+    clique in the pair set and its star is a spanning tree of that
+    clique, so the connected components are identical to those of
+    `minhash_band_pairs` while a hot bucket stays linear. Default
+    banding only: no clustering consumer needs another curve."""
+    buckets = _minhash_band_buckets(
+        df, id_col, text_col, N_MINHASH, N_BANDS, None
+    )
+    return (
+        buckets.select(
+            F.col("ids")[0].alias("doc_a"),
+            F.explode(
+                F.slice("ids", F.lit(2), F.size("ids") - F.lit(1))
+            ).alias("doc_b"),
+        )
         .distinct()
     )
 

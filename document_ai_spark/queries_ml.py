@@ -37,6 +37,7 @@ from .queries_base import (
     _SQL_SHINGLES_FROM_WORDS,
     _SQL_WORDS,
     _SQL_WORDS_CTE,
+    minhash_band_edges,
     minhash_band_pairs,
     N_BANDS,
     N_MINHASH,
@@ -124,7 +125,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # .distinct() on the exploded rows: MIN() is identical over a
     # multiset, and the per-doc form removes a full shuffle of raw
     # shingle text — the groupBy map-side-combines off the scan (same
-    # change as queries_base.minhash_band_pairs; oracle unchanged)
+    # change as queries_base._minhash_band_buckets; oracle unchanged)
     sh = d.withColumn("words", _norm_words()).select(
         "doc_id",
         F.explode(F.array_distinct(_shingles(F.col("words")))).alias(
@@ -132,7 +133,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # md5-hex-SLICE minima (r5, same construction as queries_base.
-    # minhash_band_pairs): mh_j = min over shingles of the (j%4)-th
+    # _minhash_band_buckets): mh_j = min over shingles of the (j%4)-th
     # 8-hex-char slice of md5('j//4:'||shingle) — one md5 per four hash
     # slots, fixed-width hex so lexicographic MIN == numeric MIN.
     # r6: slices projected below the aggregate (each md5 computed once
@@ -187,8 +188,9 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch per join side (8 scans of the corpus, measured); the explode
     form computes signatures once per side and the self-join's identical
     shuffle children are deduplicated by ReuseExchange. The construction
-    is the SHARED builder (queries_base.minhash_band_pairs) also backing
-    the curation engine's near-dup stage — one Spark-side impl per DuckDB
+    is queries_base.minhash_band_pairs, whose bucket stage also backs the
+    star-shaped edges of the clustering consumers (dedup_clusters, the
+    curation engine's near-dup stage) — one Spark-side impl per DuckDB
     oracle core."""
     return minhash_band_pairs(_t(spark, sf_dir, "documents"))
 
@@ -850,11 +852,13 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation with pointer jumping (O(log diameter) rounds).
     Oracle: DuckDB recursive-CTE transitive closure + min-per-node — an
     O(V*E) check that is fine at oracle scale and proves the iterative
-    Spark algorithm reaches the same fixpoint."""
+    Spark algorithm reaches the same fixpoint. The Spark side clusters
+    the star-shaped LSH edges (minhash_band_edges), a spanning forest of
+    the oracle's all-pairs graph: same components, linear per bucket."""
     from .operators.similarity import dedup_clusters
 
-    pairs = q_minhash_lsh_pairs(spark, sf_dir)
-    return dedup_clusters(pairs)
+    docs = _t(spark, sf_dir, "documents")
+    return dedup_clusters(minhash_band_edges(docs))
 
 
 SQL_DEDUP_CLUSTERS = f"""

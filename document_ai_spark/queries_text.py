@@ -189,7 +189,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already dedups map-side inside the partial aggregate, so the old
     # `.distinct()` on the exploded (doc_id, md5) rows was a second full
     # shuffle of the same data for zero information (r5, same cut as
-    # queries_base.minhash_band_pairs); array_distinct just saves the
+    # queries_base._minhash_band_buckets); array_distinct just saves the
     # md5 work on repeated shingles
     sh = d.withColumn("words", _norm_words()).select(
         "doc_id",

@@ -125,7 +125,9 @@ it replaced defeated Spark's exchange reuse — the physical plan carried
 TWO full scans and re-ran the dominant stage per join side. Shuffles
 carry 8 short band rows per doc, never shingle text; a hot boilerplate
 bucket emits its k^2 pairs either way (capped upstream by banding
-parameters), so the rewrite strictly removes work.
+parameters), so the rewrite strictly removes work. Only this entry
+expands all pairs: the clustering consumers take k-1 star edges per
+bucket from the same bucket stage.
 """,
         "## next_right_word_2d — 2-D spatial nearest join (J2)\n",
         "```\n" + plan(SP.q_next_right_word_2d(spark, sf)) + "\n```\n",
@@ -164,8 +166,9 @@ doc_id — the shuffle carries 64 longs per document, not per token.
 keeper, quality, Gopher pack, language-ID agreement) come from ONE scan
 of the documents table — composing the standalone queries would re-read
 the 100 TB text column once per flag. The r3 near-dup stage adds the
-MinHash/LSH candidate pipeline (bucketed band pair-explode — r5: no
-self-join, never all-pairs)
+MinHash/LSH bucket pipeline (band-bucket collect_set, no self-join)
+emitting star-shaped edges — each bucket's min id to every other
+member, k-1 edges for k docs, so one hot template bucket stays linear —
 plus connected components under an adaptive size gate: candidate graphs
 <= 1M edges (the sf LSH graph is a few hundred) resolve via a driver
 union-find — visible here as the broadcast ExistingRDD label side —

@@ -241,6 +241,66 @@ def test_pipeline_crash_after_extract_resumes_exactly(
     assert _shards_content(spark, out) == _shards_content(spark, ref_out)
 
 
+def _part_bytes(d) -> list[bytes]:
+    """Content of each part file in write order; gzip shards are read
+    decompressed (their header stamps the write time)."""
+    import gzip
+
+    out = []
+    for n in sorted(os.listdir(d)):
+        if n.startswith("part-"):
+            opener = gzip.open if n.endswith(".gz") else open
+            with opener(os.path.join(d, n), "rb") as f:
+                out.append(f.read())
+    return out
+
+
+def test_pipeline_crash_in_curated_write_resumes_exactly(
+    spark, pages_dir, tmp_path, monkeypatch
+):
+    """Fail the Spark tasks of the curated write (a near-dup flag that
+    raises when evaluated); the resumed run must redo curate and write
+    curated rows and export shards byte-identical to an uninterrupted
+    reference run."""
+    from pyspark.sql import functions as F
+
+    from document_ai_spark.operators import curate as curate_mod
+
+    kw = dict(
+        rules=RULES + ("neardup",), chunk_words=64, chunk_overlap=8,
+        n_shards=4, shards_per_commit=2,
+    )
+    ref_wd, ref_out = str(tmp_path / "ref_wd"), str(tmp_path / "ref")
+    run_pipeline(spark, pages_dir, ref_wd, ref_out, **kw)
+
+    wd, out = str(tmp_path / "wd"), str(tmp_path / "shards")
+
+    real = curate_mod.neardup_keeper_flags
+
+    @F.udf("boolean")
+    def boom(flag):
+        raise RuntimeError("simulated crash in curated write")
+
+    def failing_flags(*a, **k):
+        return real(*a, **k).withColumn(
+            "pass_neardup", boom("pass_neardup")
+        )
+
+    monkeypatch.setattr(curate_mod, "neardup_keeper_flags", failing_flags)
+    with pytest.raises(Exception, match="simulated crash"):
+        run_pipeline(spark, pages_dir, wd, out, **kw)
+    assert not os.path.exists(os.path.join(wd, "curated", "_SUCCESS"))
+    monkeypatch.undo()
+
+    summary = run_pipeline(spark, pages_dir, wd, out, **kw)
+    assert summary["stages"]["extract"]["chunks"] == 0
+    assert not summary["stages"]["curate"]["skipped"]
+
+    curated = _part_bytes(os.path.join(wd, "curated"))
+    assert curated and curated == _part_bytes(os.path.join(ref_wd, "curated"))
+    assert _part_bytes(out) == _part_bytes(ref_out)
+
+
 def test_pipeline_compaction_stage(spark, pages_dir, tmp_path):
     """--compact-mb defragments the extracted table between extract and
     curate; shard content must be unaffected and the stage must skip on

@@ -1,102 +1,10 @@
-"""Round-4 additions: parameterized MinHash banding, bounded
-connected-components rounds, suite branches for passages/chunking."""
+"""Round-4 additions: recrawl-collapse tiebreak, packing budget
+validation, suite branches for passages/chunking."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from document_ai_spark.queries_base import minhash_band_pairs
-
-BASE = (
-    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
-    "nu xi omicron pi rho sigma tau upsilon phi chi psi omega one two "
-    "three four five six seven eight nine ten eleven twelve thirteen"
-)
-OTHER = (
-    "completely different vocabulary nothing shared here at all zero "
-    "overlap whatsoever distinct tokens everywhere in this document "
-    "spanning enough words to carry many shingles of its very own"
-)
-
-
-@pytest.fixture(scope="module")
-def planted(spark):
-    rows = [
-        (1, BASE),
-        (2, BASE),                          # identical -> Jaccard 1.0
-        (3, BASE + " tail words appended"),  # near-dup, high Jaccard
-        (4, OTHER),                          # unrelated
-    ]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_minhash_banding_default_curve(planted):
-    pairs = {
-        (r.doc_a, r.doc_b) for r in minhash_band_pairs(planted).collect()
-    }
-    assert (1, 2) in pairs and (1, 3) in pairs and (2, 3) in pairs
-    assert not any(4 in p for p in pairs)
-
-
-def test_minhash_banding_steep_curve_16_4_4(planted):
-    pairs = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_band_pairs(
-            planted, n_hashes=16, n_bands=4, rows_per_band=4
-        ).collect()
-    }
-    # threshold ~ (1/4)^(1/4) ~ 0.71: the planted near-dups survive, the
-    # unrelated doc still never collides
-    assert (1, 2) in pairs and (1, 3) in pairs
-    assert not any(4 in p for p in pairs)
-
-
-def test_minhash_banding_rejects_inconsistent_params(planted):
-    with pytest.raises(ValueError):
-        minhash_band_pairs(planted, n_hashes=16, n_bands=5, rows_per_band=4)
-
-
-def test_connected_components_log_rounds_on_chain(spark):
-    """30-hop chain (diameter 30): pointer jumping must converge in
-    O(log d) rounds, not O(d) — the bound that keeps curation_funnel's
-    iteration tail flat at corpus scale (r3 verdict item 7)."""
-    from document_ai_spark.operators.similarity import connected_components
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], ["src", "dst"]
-    )
-    # driver_threshold=0 forces the DISTRIBUTED loop (the adaptive gate
-    # would solve 30 edges driver-side)
-    labels, rounds = connected_components(
-        edges, with_rounds=True, driver_threshold=0
-    )
-    assert 0 < rounds <= 6, rounds
-    got = labels.agg(
-        F.countDistinct("component").alias("c"),
-        F.min("component").alias("m"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    assert (got.c, got.m, got.n) == (1, 0, 31)
-
-
-def test_connected_components_total_on_null_endpoints(spark):
-    """NULL edge endpoints (outer-join artifacts) are dropped, not
-    crashed on — on BOTH paths."""
-    from document_ai_spark.operators.similarity import connected_components
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, None), (None, 5), (7, 8)],
-        "src long, dst long",
-    )
-    for thr in (10**6, 0):
-        cc = {
-            r.node: r.component
-            for r in connected_components(
-                edges, driver_threshold=thr
-            ).collect()
-        }
-        assert cc == {1: 1, 2: 1, 7: 7, 8: 7}
 
 
 def test_collapse_recrawls_deterministic_tiebreak(spark):
@@ -129,28 +37,6 @@ def test_pack_sequences_rejects_bad_budget(spark):
     )
     with pytest.raises(ValueError):
         pack_sequences(chunks, pack_words=0)
-
-
-def test_connected_components_paths_agree(spark):
-    """The adaptive driver union-find and the distributed min-label loop
-    must compute the identical fixpoint on a messy random graph."""
-    import random
-
-    rng = random.Random(13)
-    edges = [
-        (rng.randint(0, 120), rng.randint(0, 120)) for _ in range(150)
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    from document_ai_spark.operators.similarity import connected_components
-
-    fast, r_fast = connected_components(df, with_rounds=True)
-    slow, r_slow = connected_components(
-        df, with_rounds=True, driver_threshold=0
-    )
-    assert r_fast == 0 and r_slow > 0
-    a = {(r.node, r.component) for r in fast.collect()}
-    b = {(r.node, r.component) for r in slow.collect()}
-    assert a == b
 
 
 def test_suite_shared_passages_branch_non_vacuous(spark):
@@ -283,15 +169,3 @@ def test_datagen_noindex_pages_gate_non_vacuously(spark, corpus_dir):
         & (F.col("main_text") != F.col("expected_text"))
     ).count()
     assert mism == 0
-
-
-def test_minhash_banding_rows_per_band_inferred(planted):
-    # (12, 3) infers r=4; distinct high-sim candidates only
-    pairs = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_band_pairs(
-            planted, n_hashes=12, n_bands=3
-        ).collect()
-    }
-    assert (1, 2) in pairs
-    assert not any(4 in p for p in pairs)
